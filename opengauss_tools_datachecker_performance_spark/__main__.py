@@ -40,6 +40,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import uuid
 
@@ -856,6 +857,9 @@ def _run_status_demo(spark: SparkSession, args, docs_source, docs_sink) -> int:
 
     part_col = args.partition_col
     state: dict = {"statuses": {}, "checked": set(), "n_failed": 0}
+    # feed file names unique per run: the file source skips a path it
+    # has already seen, so a checkpoint-resumed run must not reuse one
+    run_id = uuid.uuid4().hex
     checked_seq = iter(range(10**6))
 
     def on_batch(batch_df, batch_id: int) -> None:
@@ -913,7 +917,7 @@ def _run_status_demo(spark: SparkSession, args, docs_source, docs_sink) -> int:
                     "st": pa.array([4] * len(ready), type=pa.int32()),
                 }
             ),
-            os.path.join(args.status_demo, f"checked_{next(checked_seq)}.parquet"),
+            os.path.join(args.status_demo, f"checked_{run_id}_{next(checked_seq)}.parquet"),
         )
 
     stream = (
@@ -1280,7 +1284,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     if args.audit_split is not None:
         sp = args.audit_split.split(":")
         if not sp[0] or len(sp) > 3 or (
-            len(sp) > 2 and not sp[2].lstrip("-").isdigit()
+            len(sp) > 2 and not re.fullmatch(r"-?\d+", sp[2])
         ):
             parser.error(
                 "--audit-split expects IDCOL[:GROUPCOL[:SEED]] with an "

@@ -24,7 +24,10 @@ Integrity model: the companion is DERIVED state. Writers maintain it
 transactionally with the doc table (same commit in Iceberg); a stale
 companion is detectable cheaply by comparing its per-partition row
 counts/XOR signatures against the doc table's lineage ledger entries
-(plans.lineage), without reading bodies.
+(plans.lineage), without reading bodies. Maintenance from a CDC feed
+(update_digest_companion / maintain_companion_from_cdc) rewrites only
+the partitions whose rows actually change: a replayed or touch-only
+batch costs a keyed lookup of the named keys and no write.
 
 Layout: partitioned by ``part`` (partition pruning for chunked /
 resumed runs) — or bucketed by ``key`` via ``table_name`` +
@@ -94,47 +97,45 @@ def update_digest_companion(
 ) -> list:
     """Incrementally maintain a ``partitionBy(part)`` companion: merge
     re-digested rows for changed docs (``upserts``: raw docs shape)
-    and remove ``delete_keys`` (a ``key`` column), rewriting ONLY the
-    affected partitions (dynamic partition overwrite). Returns the
-    list of rewritten partition values.
+    and remove ``delete_keys`` (a ``key`` column; a key that is also
+    upserted ends with its upserted rows), rewriting ONLY the
+    partitions whose content changes (dynamic partition overwrite).
+    Returns the sorted list of those partition values — ``[]`` when
+    the merge changes nothing, in which case nothing is written.
 
     This is how the companion stays fresh at 10^12 docs without a
     rebuild: the CDC feed (sources.debezium → streaming.incremental)
     names changed keys; re-digesting touches just those docs' bodies;
-    every untouched partition's files are left byte-identical. In an
-    Iceberg deployment the same merge is a MERGE INTO committed in the
+    the touched keys' stored rows are compared with the re-digested
+    ones as exact multisets inside the plan, so a re-delivered
+    unchanged row (an at-least-once replay, a touch-only update)
+    costs a keyed lookup and no write, and every partition without a
+    real change keeps its files byte-identical. In an Iceberg
+    deployment the same merge is a MERGE INTO committed in the
     writer's transaction — this file-level variant keeps the sandbox
     path self-contained and is idempotent (re-running the same update
-    converges).
+    converges, and rewrites nothing).
     """
+    if upserts is None and delete_keys is None:
+        return []
     comp = spark.read.parquet(path)
-    # persist: the re-digested upsert frame feeds THREE actions below
-    # (affected-part discovery, touched-key semi-join, final write) —
-    # without it each action would re-read + re-digest the upsert doc
-    # bodies, the exact I/O this function exists to minimize
+    # persist: the re-digested upsert frame feeds the touched-key set,
+    # both sides of the change comparison and the final write — without
+    # it each would re-read + re-digest the upsert doc bodies, the exact
+    # I/O this function exists to minimize. A delete-only merge
+    # re-digests nothing: an empty frame of the stored schema.
     new = (
-        digest_companion_frame(upserts, partition_col).persist()
-        if upserts is not None
-        else None
+        comp.limit(0)
+        if upserts is None
+        else digest_companion_frame(upserts, partition_col).persist()
     )
     try:
-        gone_keys = None
+        touched = new.select("key")
         if delete_keys is not None:
-            gone_keys = delete_keys.select(F.col("key").cast("string"))
-        if new is None and gone_keys is None:
-            return []
-
-        # affected partitions: where new rows land + where touched keys
-        # currently live (driver-side list — #partitions, not #rows)
-        parts = set()
-        if new is not None:
-            parts |= {r[0] for r in new.select("part").distinct().collect()}
-        touched = None
-        if gone_keys is not None:
-            touched = gone_keys
-        if new is not None:
-            upk = new.select("key")
-            touched = upk if touched is None else touched.unionByName(upk)
+            touched = touched.unionByName(
+                delete_keys.select(F.col("key").cast("string"))
+            )
+        touched = touched.distinct()
         # broadcast is right for the normal CDC trickle but fatal for
         # a bulk backfill / wholesale delete whose key set is
         # corpus-sized; with AQE on (production default) let the
@@ -144,31 +145,40 @@ def update_digest_companion(
             spark.conf.get("spark.sql.adaptive.enabled", "true").lower()
             == "true"
         )
-        if touched is not None:
-            touched_d = touched.distinct()
-            t_side = touched_d if aqe else F.broadcast(touched_d)
-            parts |= {
-                r[0]
-                for r in comp.join(t_side, "key", "left_semi")
-                .select("part")
-                .distinct()
-                .collect()
-            }
+        t_side = touched if aqe else F.broadcast(touched)
+        # changed partitions: the touched keys' stored rows vs their
+        # re-digested rows as exact multisets — a row whose +1 (stored)
+        # and -1 (re-digested) copies don't cancel is in
+        # old.exceptAll(new) ∪ new.exceptAll(old), computed here in ONE
+        # aggregation instead of two (a moved key changes both its old
+        # and new partition; a deleted key's rows have no counterpart).
+        # Only partition ids reach the driver.
+        old = comp.join(t_side, "key", "left_semi")
+        signed = old.withColumn("_n", F.lit(1)).unionByName(
+            new.withColumn("_n", F.lit(-1))
+        )
+        parts = {
+            r[0]
+            for r in signed.groupBy(*comp.columns)
+            .agg(F.sum("_n").alias("_n"))
+            .filter(F.col("_n") != 0)
+            .select("part")
+            .distinct()
+            .collect()
+        }
         if not parts:
             return []
 
-        cur = comp.filter(F.col("part").isin(list(parts)))
-        drop = touched.distinct()
-        keep = cur.join(drop if aqe else F.broadcast(drop), "key", "left_anti")
-        out = keep if new is None else keep.unionByName(new.select(*keep.columns))
+        in_parts = F.col("part").isin(list(parts))
+        keep = comp.filter(in_parts).join(t_side, "key", "left_anti")
+        out = keep.unionByName(new.filter(in_parts))
         # isolate the new content from the files it is computed from
         # (Spark refuses to overwrite a path it is reading)
         out = out.localCheckpoint(eager=True)
         _overwrite_partitions(spark, out, path, parts)
         return sorted(parts)
     finally:
-        if new is not None:
-            new.unpersist()
+        new.unpersist()
 
 
 def _overwrite_partitions(
@@ -219,13 +229,14 @@ def maintain_companion_from_cdc(
     The latest op per key wins (ts_ms desc); ties — same-millisecond
     ops, or no ts_ms at all — resolve deterministically TOWARD upsert,
     because the upsert path re-reads the source table (the truth): a
-    key whose doc is gone resolves to delete anyway via the missing
-    path below, so the tie rule self-corrects, whereas a delete-wins
+    key whose doc is gone re-digests to nothing and so resolves to
+    delete anyway, so the tie rule self-corrects, whereas a delete-wins
     tie could drop a live doc's row. Upserted keys re-fetch their doc
     bodies from ``docs_source`` with a broadcast semi-join (the CDC
     batch is the small side by construction — S5/P6's IN-list fetch
-    pattern); only those docs are re-digested. Returns the rewritten
-    partition values.
+    pattern); only those docs are re-digested. Returns the partitions
+    whose content changed (the only ones rewritten): a replayed or
+    touch-only batch returns ``[]`` and writes nothing.
 
     A multi-table feed MUST name the companion's table: rows from
     other tables sharing key values would otherwise delete/rewrite
@@ -254,22 +265,19 @@ def maintain_companion_from_cdc(
         .filter(F.col("_rn") == 1)
         .select("key", "op")
     )
-    up_keys = ops.filter(F.col("op") != "d").select("key").distinct()
-    del_keys = ops.filter(F.col("op") == "d").select("key").distinct()
+    up_keys = ops.filter(F.col("op") != "d").select(F.col("key").alias("doc_id"))
 
     docs = docs_source.withColumnRenamed(partition_col, "part")
     keyed = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
-    upserts = keyed.join(
-        F.broadcast(up_keys.withColumnRenamed("key", "doc_id")), "doc_id", "left_semi"
-    )
-    missing = up_keys.join(
-        keyed.select(F.col("doc_id").alias("key")), "key", "left_anti"
-    )
+    upserts = keyed.join(F.broadcast(up_keys), "doc_id", "left_semi")
+    # every resolved key is touched: its stored rows give way to whatever
+    # the upserts re-digest — nothing for a delete, or for an upsert
+    # whose doc is already gone from docs_source
     return update_digest_companion(
         spark,
         path,
         upserts=upserts.select("doc_id", "spans", "part"),
-        delete_keys=del_keys.unionByName(missing),
+        delete_keys=ops.select("key"),
     )
 
 
@@ -286,7 +294,7 @@ def companion_maintenance_stream(
     """Structured-Streaming wrapper: a decoded CDC stream (key, op[,
     ts_ms, table_name]) keeps the companion fresh, one idempotent
     partition-merge per micro-batch (exactly-once effect: replaying a
-    batch after a crash converges to the same files).
+    batch after a crash finds no changed partition and writes nothing).
     ``trigger_seconds`` None → availableNow (drain-and-stop, used by
     tests/catch-up runs); ``table_name`` is required when the feed is
     multi-table (see maintain_companion_from_cdc)."""

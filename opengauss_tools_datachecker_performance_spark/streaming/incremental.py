@@ -111,8 +111,11 @@ class IncrementalChecker:
                 "max_batch_keys explicitly"
             )
         checked = {r["doc_id"] for r in key_rows}
+        # re-check from the collected set: re-using ``keys`` would
+        # evaluate its union/distinct plan a second time
+        recheck = spark.createDataFrame([(k,) for k in checked], "doc_id string")
         diffs = {r["key"]: r["diff_type"] for r in check_changed_keys(
-            keys, self.docs_source, self.docs_sink
+            recheck, self.docs_source, self.docs_sink
         ).collect()}
         nxt: dict[str, tuple[str, int]] = {}
         newly: list[tuple[str, str, int]] = []

@@ -211,6 +211,7 @@ def test_cli_kill_and_resume(tmp_path):
             "write_corpus(s, %r, n_docs=3000, n_assets=100, n_partitions=8); s.stop()"
         ) % (repo, corpus)],
         cwd=repo, capture_output=True, text=True, timeout=300,
+        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="2g"),
     )
     assert gen.returncode == 0, gen.stderr[-2000:]
     report = str(tmp_path / "report")

@@ -3,6 +3,7 @@ must produce byte-identical violations + verdicts to the raw path."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from opengauss_tools_datachecker_performance_spark.plans.runner import (
@@ -172,6 +173,111 @@ def test_companion_staleness_and_incremental_update(spark, tmp_path):
     assert set(again) <= set(rewritten)
     comp3 = read_digest_companion(spark, comp_path)
     assert companion_stale_partitions(comp3, partition_stats(docs_v2)).count() == 0
+
+
+def _part_dirs(path):
+    """part= dir → (mtime, file names): any rewrite changes both."""
+    return {
+        d: (os.path.getmtime(os.path.join(path, d)), sorted(os.listdir(os.path.join(path, d))))
+        for d in os.listdir(path)
+        if d.startswith("part=")
+    }
+
+
+def _assert_companion_derives(spark, comp_path, docs, tmp_path, name):
+    """The maintained companion holds exactly the rows a fresh
+    write_digest_companion of ``docs`` would (as multisets)."""
+    fresh_path = str(tmp_path / name)
+    write_digest_companion(docs, fresh_path)
+    got = read_digest_companion(spark, comp_path)
+    want = read_digest_companion(spark, fresh_path).select(*got.columns)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_companion_maintenance_rewrites_only_changed_partitions(spark, tmp_path, aqe):
+    """Change detection: a CDC batch rewrites exactly the partitions
+    whose companion rows change, and a replayed batch writes nothing —
+    under both join strategies (AQE's runtime choice, broadcast hint)."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        _check_change_detection(spark, tmp_path)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _check_change_detection(spark, tmp_path):
+    from opengauss_tools_datachecker_performance_spark.sources.prehashed import (
+        maintain_companion_from_cdc,
+        update_digest_companion,
+    )
+
+    corpus = str(tmp_path / "corpus")
+    write_corpus(spark, corpus, n_docs=400, n_assets=30, n_partitions=8)
+    src = spark.read.parquet(f"{corpus}/docs_source.parquet").select(
+        "doc_id", "spans", "part"
+    )
+    unique = src.groupBy("doc_id").count().filter("count = 1").select("doc_id")
+    # one single-row, multi-span doc per partition (so truncating its
+    # spans is a real change), each playing one role below
+    picks = {
+        r["part"]: r
+        for r in src.join(unique, "doc_id")
+        .filter(F.size("spans") >= 2)
+        .orderBy("doc_id")
+        .collect()
+    }
+    assert len(picks) == 8
+    upd, same, mover, dup = (picks[p] for p in (0, 1, 2, 3))
+    # a key with two doc rows (hence two companion rows) in parts 3 and 4
+    dup2 = (dup["doc_id"], picks[4]["spans"], 4)
+    docs_v1 = src.unionByName(spark.createDataFrame([dup2], src.schema))
+    comp_path = str(tmp_path / "comp")
+    write_digest_companion(docs_v1, comp_path)
+
+    # the writer's changes: upd's spans truncated, mover moved 2 → 5,
+    # dup's part-4 row truncated (its part-3 row unchanged); same and
+    # absent-key are a re-delivered upsert and a no-op delete
+    changed = {
+        upd["doc_id"]: (upd["doc_id"], upd["spans"][:1], 0),
+        mover["doc_id"]: (mover["doc_id"], mover["spans"], 5),
+    }
+    docs_v2 = (
+        src.filter(~F.col("doc_id").isin(list(changed)))
+        .unionByName(spark.createDataFrame(list(changed.values()), src.schema))
+        .unionByName(
+            spark.createDataFrame([(dup["doc_id"], dup2[1][:1], 4)], src.schema)
+        )
+    )
+    cdc = spark.createDataFrame(
+        [
+            (upd["doc_id"], "u"),
+            (same["doc_id"], "u"),
+            ("absent-key", "d"),
+            (mover["doc_id"], "u"),
+            (dup["doc_id"], "u"),
+        ],
+        "key string, op string",
+    )
+    before = _part_dirs(comp_path)
+    rewritten = maintain_companion_from_cdc(spark, comp_path, docs_v2, cdc)
+    assert rewritten == [0, 2, 4, 5]
+    after = _part_dirs(comp_path)
+    for d, snap in before.items():
+        if int(d.split("=")[1]) not in rewritten:
+            assert after[d] == snap, d
+    _assert_companion_derives(spark, comp_path, docs_v2, tmp_path, "fresh_v2")
+
+    # replay: nothing changes, nothing is written
+    assert maintain_companion_from_cdc(spark, comp_path, docs_v2, cdc) == []
+    assert update_digest_companion(
+        spark, comp_path,
+        delete_keys=spark.createDataFrame([("absent-key",)], "key string"),
+    ) == []
+    assert _part_dirs(comp_path) == after
+    _assert_companion_derives(spark, comp_path, docs_v2, tmp_path, "fresh_v2b")
 
 
 def test_cli_accepts_companion_tables(spark, tmp_path):

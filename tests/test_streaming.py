@@ -436,6 +436,22 @@ def test_streaming_demo_malformed_kafka_uri_is_argparse_error():
     assert exc.value.code == 2
 
 
+def _drop_status_reports(path, rows):
+    """One (slice_no, st) extract-report file of the --status-demo feed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "slice_no": pa.array([r[0] for r in rows], type=pa.int32()),
+                "st": pa.array([r[1] for r in rows], type=pa.int32()),
+            }
+        ),
+        str(path),
+    )
+
+
 def test_status_demo_full_orchestration_cycle(corpus, spark, tmp_path):
     """--status-demo: report → ready → check → done, end to end.
     Slice 0 receives source(1)+sink(2) reports in separate files →
@@ -443,9 +459,6 @@ def test_status_demo_full_orchestration_cycle(corpus, spark, tmp_path):
     drives the register to DONE(7). Slice 1 receives only source(1)
     and must stay pending, unchecked."""
     import json
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from opengauss_tools_datachecker_performance_spark.__main__ import main
 
@@ -457,19 +470,8 @@ def test_status_demo_full_orchestration_cycle(corpus, spark, tmp_path):
     feed = tmp_path / "status"
     feed.mkdir()
 
-    def drop(name, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "slice_no": pa.array([r[0] for r in rows], type=pa.int32()),
-                    "st": pa.array([r[1] for r in rows], type=pa.int32()),
-                }
-            ),
-            str(feed / name),
-        )
-
-    drop("e0.parquet", [(0, 1), (1, 1)])  # source extracts reported
-    drop("e1.parquet", [(0, 2)])  # sink extract for slice 0 only
+    _drop_status_reports(feed / "e0.parquet", [(0, 1), (1, 1)])  # source extracts reported
+    _drop_status_reports(feed / "e1.parquet", [(0, 2)])  # sink extract for slice 0 only
     out_dir = tmp_path / "out"
     rc = main(
         [
@@ -493,6 +495,45 @@ def test_status_demo_full_orchestration_cycle(corpus, spark, tmp_path):
     # the seeded corpus plants violations in every partition → the
     # checked slice must fail and the exit code must say so
     assert verdicts[0]["verdict"] == "failed" and rc == 1
+
+
+def test_status_demo_resumed_run_writes_new_feedback_files(corpus, spark, tmp_path):
+    """A checkpoint-resumed --status-demo run must name its CHECKED(4)
+    feedback files afresh: the file source skips paths it has already
+    seen, so a reused name would leave the slice stuck at READY and
+    clobber the first run's feed file."""
+    import json
+
+    from opengauss_tools_datachecker_performance_spark.__main__ import main
+
+    src_path = str(tmp_path / "src.parquet")
+    sink_path = str(tmp_path / "sink.parquet")
+    corpus["docs_source"].write.mode("overwrite").parquet(src_path)
+    corpus["docs_sink"].write.mode("overwrite").parquet(sink_path)
+    feed = tmp_path / "status"
+    feed.mkdir()
+
+    def run():
+        main(
+            [
+                "--source", src_path,
+                "--sink", sink_path,
+                "--report-dir", str(tmp_path / "out"),
+                "--checkpoint-dir", str(tmp_path / "ckpt"),
+                "--status-demo", str(feed),
+            ],
+            spark=spark,
+        )
+        return {f for f in os.listdir(feed) if f.startswith("checked_")}
+
+    _drop_status_reports(feed / "e0.parquet", [(0, 1), (0, 2), (1, 1)])  # slice 0 ready
+    first = run()
+    assert first
+    _drop_status_reports(feed / "e1.parquet", [(1, 2)])  # slice 1 ready, after the restart
+    second = run()
+    assert first < second  # the first run's files survive, new names added
+    summary = json.load(open(tmp_path / "out" / "status_demo.json"))
+    assert summary["slice_status"]["1"] == 7  # its feedback was read
 
 
 def test_status_demo_requires_sink_and_checkpoint():
